@@ -90,8 +90,11 @@ def vint_decode(buf: np.ndarray) -> np.ndarray:
     b = np.asarray(buf, dtype=np.uint8)
     if b.size == 0:
         return np.zeros(0, dtype=np.uint64)
-    is_end = (b & 0x80) == 0
-    ends = np.flatnonzero(is_end)
+    return _vint_values(b, np.flatnonzero((b & 0x80) == 0))
+
+
+def _vint_values(b: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """Varint values of ``b`` whose last bytes are at ``ends``."""
     starts = np.concatenate(([0], ends[:-1] + 1))
     lengths = ends - starts + 1
     pos = np.arange(b.size, dtype=np.int64) - np.repeat(starts, lengths)
@@ -310,6 +313,174 @@ def decode_block(
     freqs, off = pfor_decode_freqs(buf, 1 + nd, num_docs)
     docs = np.cumsum(deltas) + prev_last_doc
     return docs, freqs, _norms(off)
+
+
+def _ranges(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(starts[i], starts[i] + lengths[i])``."""
+    total = int(lengths.sum())
+    heads = np.cumsum(lengths) - lengths
+    return np.arange(total, dtype=np.int64) + np.repeat(starts - heads, lengths)
+
+
+def _unpack_at(words: np.ndarray, bitpos: np.ndarray, widths: np.ndarray) -> np.ndarray:
+    """Read one little-endian bit field per value: ``widths[i]`` bits from
+    bit ``bitpos[i]`` of the buffer behind ``words`` (the byte-strided
+    uint64 view from ``decode_blocks``) -> uint64. Same bits as
+    ``for_unpack``; fields straddling a 64-bit window take a second word."""
+    byte = bitpos >> 3
+    shift = (bitpos & 7).astype(np.uint64)
+    w = widths.astype(np.uint64)
+    vals = words[byte] >> shift
+    over = np.flatnonzero(shift + w > 64)
+    if over.size:
+        vals[over] |= words[byte[over] + 8] << (np.uint64(64) - shift[over])
+    short = w < 64
+    vals[short] &= (np.uint64(1) << w[short]) - np.uint64(1)
+    return vals
+
+
+def decode_blocks(
+    data, num_docs, first_doc
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode MANY blocks in one vectorized pass -> concatenated
+    (doc_ids, freqs, norm_bytes) int64 arrays, equal to concatenating
+    ``decode_block(data[i], num_docs[i], first_doc[i])`` over i.
+
+    Every block's section offsets are computed across blocks at once; bit
+    fields (FOR deltas, PFOR freq lows, norms) are read through one
+    byte-strided uint64 view of the joined buffer. The VInt-tail code/freq
+    structure, a sequential walk in decode_block, is resolved for all tail
+    blocks at once: directly where every code is folded, else by pointer
+    doubling along the code chain (<= 8 numpy steps for < 256 docs).
+    """
+    nd = np.asarray(num_docs, dtype=np.int64)
+    fd = np.asarray(first_doc, dtype=np.int64)
+    n_blocks = nd.size
+    total = int(nd.sum())
+    if n_blocks == 0:
+        z = np.zeros(0, dtype=np.int64)
+        return z, z.copy(), z.copy()
+    lens = np.fromiter((len(b) for b in data), dtype=np.int64, count=n_blocks)
+    # 16 zero bytes of padding: every uint64 read below stays in bounds
+    raw = np.frombuffer(b"".join(data) + bytes(16), dtype=np.uint8)
+    words = np.ndarray((raw.size - 7,), dtype="<u8", buffer=raw, strides=(1,))
+    bstart = np.cumsum(lens) - lens
+    pstart = np.cumsum(nd) - nd
+    pblock = np.repeat(np.arange(n_blocks, dtype=np.int64), nd)
+    pord = np.arange(total, dtype=np.int64) - pstart[pblock]
+    marker = raw[bstart]
+    is_tail = marker == _TAIL_MARKER
+    is_bits = marker == _BITSET_MARKER
+    is_for = ~(is_tail | is_bits)
+
+    deltas = np.zeros(total, dtype=np.int64)
+    freqs = np.ones(total, dtype=np.int64)
+    norm_off = np.zeros(n_blocks, dtype=np.int64)  # absolute width-byte pos
+
+    def packed(blocks, off, width):
+        """The postings of ``blocks`` (rows) and their values, packed
+        ``width[i]`` bits each from byte ``off[i]`` of block i."""
+        rows = _ranges(pstart[blocks], nd[blocks])
+        i = np.repeat(np.arange(blocks.size), nd[blocks])
+        bitpos = off[i] * 8 + pord[rows] * width[i]
+        return rows, _unpack_at(words, bitpos, width[i]).astype(np.int64)
+
+    # ---- VInt tails: decode every value of every tail body (the norm
+    # bytes after it decode as junk values the walk never reaches, exactly
+    # as in decode_block), then find each posting's code value
+    tb = np.flatnonzero(is_tail)
+    if tb.size:
+        tlen = lens[tb] - 1
+        tnd = nd[tb]
+        thead = np.cumsum(tlen) - tlen  # body start in the joined bodies
+        body = raw[_ranges(bstart[tb] + 1, tlen)]
+        is_end = (body & 0x80) == 0
+        is_end[thead + tlen - 1] = True  # no value spans two blocks
+        ends = np.flatnonzero(is_end)
+        vals = _vint_values(body, ends)
+        step = 2 - (vals & np.uint64(1)).astype(np.int64)
+        first = np.searchsorted(ends, thead)  # first value of each body
+        rows = _ranges(pstart[tb], tnd)
+        k = pord[rows]
+        # code k of a block sits at first + k while its first k codes are
+        # folded (odd); blocks with an unfolded code follow their code
+        # chain (next = i + step[i]) by pointer doubling instead
+        code_idx = np.repeat(first, tnd) + k
+        unfolded = np.concatenate(([0], np.cumsum(step == 2)))
+        chained = np.repeat(unfolded[first + tnd] > unfolded[first], tnd)
+        if chained.any():
+            kk = k[chained]
+            pos = code_idx[chained] - kk
+            jump = np.minimum(np.arange(vals.size) + step, vals.size - 1)
+            for bit in range(int(kk.max()).bit_length()):
+                m = ((kk >> bit) & 1) == 1
+                pos[m] = jump[pos[m]]
+                jump = jump[jump]
+            code_idx[chained] = pos
+        code = vals[code_idx]
+        deltas[rows] = (code >> np.uint64(1)).astype(np.int64)
+        unf = np.flatnonzero((code & np.uint64(1)) == 0)
+        freqs[rows[unf]] = vals[code_idx[unf] + 1].astype(np.int64)
+        # body ends with the last posting's code, or its freq if unfolded
+        body_len = np.zeros(tb.size, dtype=np.int64)
+        has = tnd > 0
+        last = code_idx[np.cumsum(tnd)[has] - 1]
+        last += 1 - (vals[last] & np.uint64(1)).astype(np.int64)
+        body_len[has] = ends[last] + 1 - thead[has]
+        norm_off[tb] = bstart[tb] + 1 + body_len
+
+    # ---- full blocks: FOR or bitset doc section, then PFOR freqs
+    fb = np.flatnonzero(~is_tail)
+    if fb.size:
+        freq_off = np.empty(n_blocks, dtype=np.int64)
+        b = np.flatnonzero(is_for)
+        if b.size:
+            wd = raw[bstart[b]].astype(np.int64)
+            rows, vals = packed(b, bstart[b] + 1, wd)
+            deltas[rows] = vals
+            freq_off[b] = bstart[b] + 1 + (nd[b] * wd + 7) // 8
+        b = np.flatnonzero(is_bits)
+        freq_off[b] = (bstart[b] + 3 + raw[bstart[b] + 1].astype(np.int64)
+                       + (raw[bstart[b] + 2].astype(np.int64) << 8))
+        freq_off = freq_off[fb]
+        wbyte = raw[freq_off].astype(np.int64)
+        base = wbyte & 0x7F
+        rows, vals = packed(fb, freq_off + 1, base)
+        freqs[rows] = vals
+        norm_off[fb] = freq_off + 1 + (nd[fb] * base + 7) // 8
+        # patched exceptions: [n_exc][pos u8 ...][high VInt ...]
+        pat = np.flatnonzero(wbyte & _PFOR_FLAG)
+        if pat.size:
+            p = norm_off[fb[pat]]
+            n_exc = raw[p].astype(np.int64)
+            h0 = p + 1 + n_exc
+            term_pos = np.flatnonzero((raw & 0x80) == 0)
+            k = np.searchsorted(term_pos, h0) + n_exc - 1
+            h1 = np.where(n_exc > 0, term_pos[np.maximum(k, 0)] + 1, h0)
+            highs = vint_decode(raw[_ranges(h0, h1 - h0)]).astype(np.int64)
+            at = np.repeat(pstart[fb[pat]], n_exc) + raw[_ranges(p + 1, n_exc)]
+            freqs[at] |= highs << np.repeat(base[pat], n_exc)
+            norm_off[fb[pat]] = h1
+
+    # ---- docs: per-block running sum of deltas from first_doc (bitset
+    # blocks instead list the set bits of their span)
+    csum = np.cumsum(deltas)
+    before = np.concatenate(([0], csum))[pstart]
+    docs = csum - before[pblock] + fd[pblock]
+    bb = np.flatnonzero(is_bits)
+    if bb.size:
+        span = raw[bstart[bb] + 1].astype(np.int64) | (raw[bstart[bb] + 2].astype(np.int64) << 8)
+        bits = np.unpackbits(raw[_ranges(bstart[bb] + 3, span)], bitorder="little")
+        setb = np.flatnonzero(bits)
+        span_start = (np.cumsum(span) - span) * 8
+        owner = np.searchsorted(span_start, setb, side="right") - 1
+        if not np.array_equal(np.bincount(owner, minlength=bb.size), nd[bb]):
+            raise ValueError("bitset block: set bits != num_docs")
+        docs[_ranges(pstart[bb], nd[bb])] = setb - span_start[owner] + fd[bb][owner]
+
+    # ---- norms: [wn][FOR norms] at each block's norm offset
+    _, norms = packed(np.arange(n_blocks), norm_off + 1, raw[norm_off].astype(np.int64))
+    return docs, freqs, norms
 
 
 def competitive_impacts(freqs: np.ndarray, norm_bytes: np.ndarray) -> tuple[list[int], list[int]]:
@@ -636,19 +807,9 @@ def encode_postings_batch(
 def decode_postings(blocks: list[dict]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Inverse of encode_postings over an ordered block list ->
     (doc_ids, freqs, norm_bytes)."""
-    docs_all: list[np.ndarray] = []
-    freqs_all: list[np.ndarray] = []
-    norms_all: list[np.ndarray] = []
-    for blk in sorted(blocks, key=lambda x: x["block_id"]):
-        d, f, n = decode_block(blk["data"], blk["num_docs"], blk["first_doc"])
-        docs_all.append(d)
-        freqs_all.append(f)
-        norms_all.append(n)
-    if not docs_all:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z.copy(), z.copy()
-    return (
-        np.concatenate(docs_all),
-        np.concatenate(freqs_all),
-        np.concatenate(norms_all),
+    blocks = sorted(blocks, key=lambda x: x["block_id"])
+    return decode_blocks(
+        [blk["data"] for blk in blocks],
+        [blk["num_docs"] for blk in blocks],
+        [blk["first_doc"] for blk in blocks],
     )

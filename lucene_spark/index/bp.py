@@ -293,7 +293,7 @@ def reorder_index(
 
     from pyspark.sql import functions as F
 
-    from lucene_spark.index.build import load_manifest
+    from lucene_spark.index.build import POSTINGS_SCHEMA, load_manifest
 
     manifest = load_manifest(index_dir)
     if manifest is None or not manifest.get("merged"):
@@ -534,10 +534,7 @@ def reorder_index(
             )})
         del out_cols
 
-    schema = ("term string, segment_id int, block_id int, first_doc long, "
-              "last_doc long, num_docs int, ttf long, data binary, "
-              "impact_freqs array<int>, impact_norms array<int>, "
-              "term_bucket int")
+    schema = POSTINGS_SCHEMA + ", term_bucket int"
     tmp = post_path + ".bp"
     (
         post.repartition(
@@ -557,7 +554,7 @@ def reorder_index(
     if os.path.exists(local_path):
         loc = spark.read.parquet(local_path).withColumnRenamed(
             "segment", "part_segment")
-        loc_schema = schema.replace("term_bucket int", "part_segment int")
+        loc_schema = POSTINGS_SCHEMA + ", part_segment int"
         tmp = local_path + ".bp"
         (
             loc.repartition(

@@ -80,8 +80,8 @@ RAM_EXPANSION = 8
 class IndexConfig:
     num_segments: int = 8
     term_buckets: int = 16
-    # terms with global df >= this are "hot": kept segment-blocked in the
-    # merge (salted pass-through) instead of being re-gathered in one task
+    # terms with global df >= this are "hot": their segment blocks pass
+    # through the merge as they are instead of being decoded and re-blocked
     hot_term_df: int = 1 << 16
     # analysis chain (lucene_spark.functions.analysis.ANALYZERS)
     analyzer: str = "standard"
@@ -1121,10 +1121,24 @@ def collection_stats(manifest: dict) -> tuple[int, int]:
     return doc_count, sum_ttf
 
 
+#: columns of every postings table (``postings_local`` and ``postings``,
+#: the latter plus ``term_bucket``), as written by the segment builder
+POSTINGS_SCHEMA = (
+    "term string, segment_id int, block_id int, first_doc long, last_doc long, "
+    "num_docs int, ttf long, data binary, "
+    "impact_freqs array<int>, impact_norms array<int>"
+)
+
+
 def read_postings_local(spark: SparkSession, index_dir: str) -> DataFrame:
+    # the explicit schema spares a parquet schema-inference job per read;
     # drop the hive-partition column derived from segment=K dirs
     # (segment_id is stored explicitly in the rows)
-    return spark.read.parquet(os.path.join(index_dir, "postings_local")).drop("segment")
+    return (
+        spark.read.schema(POSTINGS_SCHEMA)
+        .parquet(os.path.join(index_dir, "postings_local"))
+        .drop("segment")
+    )
 
 
 def read_docmap(spark: SparkSession, index_dir: str) -> DataFrame:

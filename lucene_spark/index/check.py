@@ -94,27 +94,21 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
         posts = spark.read.parquet(path)
 
         def _block_check(batches):
-            from lucene_spark.functions.codec import decode_block
+            from lucene_spark.functions.codec import decode_blocks
             for pdf in batches:
-                bad = 0
-                for nd, fd, ld, data in zip(
-                    pdf["num_docs"].to_numpy(np.int64),
-                    pdf["first_doc"].to_numpy(np.int64),
-                    pdf["last_doc"].to_numpy(np.int64),
-                    pdf["data"].to_numpy(object),
-                ):
-                    docs, freqs, norms = decode_block(data, int(nd), int(fd))
-                    if (
-                        docs.size != nd
-                        or docs[0] != fd
-                        or docs[-1] != ld
-                        or (np.diff(docs) <= 0).any()
-                        or (freqs < 1).any()
-                        or (norms < 0).any()
-                        or (norms > 255).any()
-                    ):
-                        bad += 1
-                yield pd.DataFrame({"bad": [bad]})
+                nd = pdf["num_docs"].to_numpy(np.int64)
+                fd = pdf["first_doc"].to_numpy(np.int64)
+                docs, freqs, norms = decode_blocks(pdf["data"].to_numpy(object), nd, fd)
+                blk = np.repeat(np.arange(nd.size), nd)
+                bad_post = (freqs < 1) | (norms < 0) | (norms > 255)
+                bad_post[1:] |= (np.diff(docs) <= 0) & (blk[1:] == blk[:-1])
+                bad = np.bincount(blk[bad_post], minlength=nd.size) > 0
+                # first/last doc agree with the block metadata
+                has = nd > 0
+                head = (np.cumsum(nd) - nd)[has]
+                bad[has] |= docs[head] != fd[has]
+                bad[has] |= docs[head + nd[has] - 1] != pdf["last_doc"].to_numpy(np.int64)[has]
+                yield pd.DataFrame({"bad": [int((bad | ~has).sum())]})
 
         bad_blocks = (
             posts.select("num_docs", "first_doc", "last_doc", "data")

@@ -31,7 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lucene_spark.index.build import load_manifest, write_manifest
+from lucene_spark.index.build import POSTINGS_SCHEMA, load_manifest, write_manifest
 
 DELETES_DIR = "deletes"
 STAGING_DIR = "deletes_expunge_staging"
@@ -480,9 +480,7 @@ def expunge_deletes(spark: SparkSession, index_dir: str,
                 )}
             )
 
-    schema = ("term string, segment_id int, block_id int, first_doc long, "
-              "last_doc long, num_docs int, ttf long, data binary, "
-              "impact_freqs array<int>, impact_norms array<int>, term_bucket int")
+    schema = POSTINGS_SCHEMA + ", term_bucket int"
     tmp = post_path + ".expunge"
     (
         # pre-partition by (segment, bucket) so each rewrite task loads only
@@ -508,10 +506,7 @@ def expunge_deletes(spark: SparkSession, index_dir: str,
         loc = spark.read.parquet(local_path).withColumnRenamed(
             "segment", "part_segment"
         )
-        loc_schema = ("term string, segment_id int, block_id int, "
-                      "first_doc long, last_doc long, num_docs int, ttf long, "
-                      "data binary, impact_freqs array<int>, "
-                      "impact_norms array<int>, part_segment int")
+        loc_schema = POSTINGS_SCHEMA + ", part_segment int"
 
         def rewrite_local(batches):
             from lucene_spark.functions.codec import (

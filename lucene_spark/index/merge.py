@@ -1,4 +1,4 @@
-"""Global merge: term-partitioned shuffle with hot-term salting + term_dict.
+"""Global merge: one term-bucket shuffle, streaming re-merge + term_dict.
 
 The Spark analog of the reference's segment merge (public Apache Lucene
 source, semantics only): ``SegmentMerger.mergeTerms`` does a k-way sorted-term
@@ -11,21 +11,25 @@ remap:
      groupBy-sum — map-side partial aggregation makes Zipf skew harmless here.
   2. ``postings``: the query-facing table, hash-partitioned into
      ``term_bucket`` directories and sorted by term within files so a term
-     lookup prunes both partitions and parquet row groups.
-     - cold terms (df < hot_term_df): all blocks of a term are re-gathered in
-       one applyInPandas group and re-encoded into dense 256-doc blocks
-       (tiny tail blocks from many segments collapse into full blocks).
+     lookup prunes both partitions and parquet row groups. ONE shuffle brings
+     each bucket into one task, sorted by (term, segment_id, block_id), and a
+     streaming ``mapInPandas`` walks the terms in order:
+     - cold terms (df < hot_term_df): a complete term's blocks are re-encoded
+       into dense 256-doc blocks (tiny tail blocks from many segments
+       collapse into full blocks), many terms per batch-decode/encode call.
      - hot terms (df >= hot_term_df — the Zipf head; StandardAnalyzer keeps
-       stopwords!): NEVER gathered into one task. Their per-segment blocks are
-       already globally ordered (disjoint doc ranges), so they pass through
-       unchanged and the shuffle spreads them by (term, segment) — this is the
-       explicit skew-salting stage (SURVEY.md §7 R3). At 10^12 turns a
-       stopword's posting list is ~10^11 entries; any design that funnels it
-       through one task is dead on arrival.
+       stopwords!): once the running df of a term reaches hot_term_df its
+       blocks pass through unchanged. Per-segment blocks are already
+       globally ordered (disjoint doc ranges), so nothing is decoded.
+     The Python side holds only the current term's blocks, and only while
+     the term is still cold, so no Python buffer ever holds more than
+     hot_term_df postings of one term, however long its list (a hot term's
+     blocks stream through the task one Arrow batch at a time).
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
@@ -35,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lucene_spark.index.build import (
+    POSTINGS_SCHEMA,
     IndexConfig,
     load_manifest,
     read_postings_local,
@@ -42,12 +47,6 @@ from lucene_spark.index.build import (
 )
 
 MERGED_SEGMENT_ID = -1
-
-_POSTINGS_SCHEMA = (
-    "term string, segment_id int, block_id int, first_doc long, last_doc long, "
-    "num_docs int, ttf long, data binary, "
-    "impact_freqs array<int>, impact_norms array<int>"
-)
 
 
 def merge_index(spark: SparkSession, index_dir: str) -> dict:
@@ -75,36 +74,24 @@ def merge_index(spark: SparkSession, index_dir: str) -> dict:
         .write.mode("overwrite")
         .parquet(td_path)
     )
-    term_dict = spark.read.parquet(td_path)
 
-    # ---- 2. global postings
-    hot = config.hot_term_df
-    df_of_term = term_dict.select("term", "doc_freq")
-    tagged = local.join(F.broadcast(df_of_term.filter(F.col("doc_freq") >= hot)),
-                        on="term", how="left")
-    # (broadcast of the hot-term list: Zipf head is tiny by construction)
-    cold = tagged.filter(F.col("doc_freq").isNull()).drop("doc_freq")
-    hot_rows = tagged.filter(F.col("doc_freq").isNotNull()).drop("doc_freq")
-
-    # re-merge cold terms BUCKET-at-a-time: one pandas group per term would
-    # mean one Arrow round-trip per term (tens of thousands); per-bucket
-    # groups amortize that and let the vectorized batch encoder re-block
-    # every term in the bucket in one numpy pass.
-    n_buckets = max(config.term_buckets, spark.sparkContext.defaultParallelism)
-    merged_cold = (
-        cold.withColumn("merge_bucket", term_bucket_col(n_buckets))
-        .groupBy("merge_bucket")
-        .applyInPandas(_remerge_bucket, _POSTINGS_SCHEMA)
-    )
-
+    # ---- 2. global postings: one shuffle into defaultParallelism tasks.
+    # Any partition count keeps each bucket whole in one task (so one file
+    # per term_bucket directory); term_buckets-many tasks instead would
+    # pay a Python worker per task for no parallelism on a small box.
     buckets = config.term_buckets
-    out = merged_cold.unionByName(hot_rows).withColumn(
-        "term_bucket", term_bucket_col(buckets)
-    )
     post_path = os.path.join(index_dir, "postings")
     (
-        out.repartition(buckets, "term_bucket")
+        local.withColumn("term_bucket", term_bucket_col(buckets))
+        .repartition(max(spark.sparkContext.defaultParallelism, 1), "term_bucket")
         .sortWithinPartitions("term", "segment_id", "block_id")
+        .mapInPandas(
+            functools.partial(_remerge_stream, hot_term_df=config.hot_term_df),
+            POSTINGS_SCHEMA + ", term_bucket int",
+        )
+        # lead with term_bucket: the partitioned writer needs that order, and
+        # would otherwise re-sort by it alone, discarding the term order
+        .sortWithinPartitions("term_bucket", "term", "segment_id", "block_id")
         .write.mode("overwrite")
         .partitionBy("term_bucket")
         .parquet(post_path)
@@ -122,7 +109,8 @@ def merge_index(spark: SparkSession, index_dir: str) -> dict:
             .drop("segment")
             .withColumn("term_bucket", term_bucket_col(buckets))
             .repartition(buckets, "term_bucket")
-            .sortWithinPartitions("term", "doc_id")
+            # term_bucket first, as for postings above
+            .sortWithinPartitions("term_bucket", "term", "doc_id")
             .write.mode("overwrite")
             .partitionBy("term_bucket")
             .parquet(os.path.join(index_dir, "positions"))
@@ -134,8 +122,53 @@ def merge_index(spark: SparkSession, index_dir: str) -> dict:
     return manifest
 
 
-def _remerge_bucket(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-    """Re-encode ALL cold terms of one bucket into dense merged blocks.
+def _remerge_stream(batches, hot_term_df: int):
+    """Stream one task's (term, segment_id, block_id)-sorted blocks.
+
+    A term's rows are contiguous but may span Arrow batches, so the last
+    term of a batch stays open: held back while its running df is below
+    ``hot_term_df`` (and re-examined with the next batch), or passed
+    through from the moment it reaches it. Every other term in a batch is
+    complete: hot ones pass through, cold ones are re-encoded together.
+    """
+    held = None      # rows of the open term while it is still cold
+    hot_term = None  # the open term once it has turned hot
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        if hot_term is not None:
+            # leading rows that continue the open hot term pass through
+            other = np.flatnonzero(pdf["term"].to_numpy(object) != hot_term)
+            n = int(other[0]) if other.size else len(pdf)
+            if n:
+                yield pdf.iloc[:n]
+            if n == len(pdf):
+                continue
+            pdf = pdf.iloc[n:]
+            hot_term = None
+        if held is not None:
+            pdf = pd.concat([held, pdf], ignore_index=True)
+            held = None
+        terms = pdf["term"].to_numpy(object)
+        starts = np.flatnonzero(np.concatenate(([True], terms[1:] != terms[:-1])))
+        run_df = np.add.reduceat(pdf["num_docs"].to_numpy(np.int64), starts)
+        is_hot = np.repeat(run_df >= hot_term_df, np.diff(np.append(starts, len(pdf))))
+        last = int(starts[-1])
+        if is_hot[-1]:
+            hot_term = terms[-1]
+        else:
+            held = pdf.iloc[last:]
+            is_hot = is_hot[:last]
+        if is_hot.any():
+            yield pdf.iloc[:is_hot.size][is_hot]
+        if not is_hot.all():
+            yield _reencode(pdf.iloc[:is_hot.size][~is_hot])
+    if held is not None:
+        yield _reencode(held)
+
+
+def _reencode(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Re-encode complete cold terms into dense merged blocks.
 
     Rows arrive as (term, segment) blocks from every segment; segment doc
     ranges are disjoint and ascending in segment_id, so per term the
@@ -143,43 +176,23 @@ def _remerge_bucket(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
     and re-block with the vectorized batch encoder, no docID remap
     (contrast ``DocIDMerger.java:73-99``).
     """
-    from lucene_spark.functions.codec import decode_block, encode_postings_batch
+    from lucene_spark.functions.codec import decode_blocks, encode_postings_batch
 
-    if not len(pdf):
-        return pd.DataFrame(
-            columns=["term", "segment_id", "block_id", "first_doc", "last_doc",
-                     "num_docs", "ttf", "data", "impact_freqs", "impact_norms"]
-        )
-    pdf = pdf.sort_values(["term", "segment_id", "block_id"], kind="mergesort")
-    docs_l, freqs_l, norms_l = [], [], []
-    for nd, fd, data in zip(
-        pdf["num_docs"].to_numpy(np.int64),
-        pdf["first_doc"].to_numpy(np.int64),
-        pdf["data"].to_numpy(object),
-    ):
-        d, f, nb = decode_block(data, int(nd), int(fd))
-        docs_l.append(d)
-        freqs_l.append(f)
-        norms_l.append(nb)
-    docs = np.concatenate(docs_l)
-    freqs = np.concatenate(freqs_l)
-    norms = np.concatenate(norms_l)
-
-    terms = pdf["term"].to_numpy(object)
     sizes = pdf["num_docs"].to_numpy(np.int64)
+    docs, freqs, norms = decode_blocks(
+        pdf["data"].to_numpy(object), sizes, pdf["first_doc"].to_numpy(np.int64)
+    )
+    terms = pdf["term"].to_numpy(object)
     # per-term posting ranges in the concatenated arrays
-    tchange = np.concatenate(([True], terms[1:] != terms[:-1]))
-    row_ends = np.cumsum(sizes)
-    row_starts = row_ends - sizes
-    starts = row_starts[tchange]
-    term_of = terms[tchange]
-    ends = np.concatenate((starts[1:], [docs.size]))
-
+    tchange = np.flatnonzero(np.concatenate(([True], terms[1:] != terms[:-1])))
+    starts = (np.cumsum(sizes) - sizes)[tchange]
+    ends = np.append(starts[1:], docs.size)
     batch = encode_postings_batch(docs, freqs, norms, starts, ends)
-    out = pd.DataFrame(
+    tidx = np.asarray(batch["term_idx"], dtype=np.int64)
+    return pd.DataFrame(
         {
-            "term": term_of[batch["term_idx"]],
-            "segment_id": np.full(len(batch["block_id"]), MERGED_SEGMENT_ID, dtype=np.int32),
+            "term": terms[tchange][tidx],
+            "segment_id": np.full(tidx.size, MERGED_SEGMENT_ID, dtype=np.int32),
             "block_id": batch["block_id"],
             "first_doc": batch["first_doc"],
             "last_doc": batch["last_doc"],
@@ -188,13 +201,9 @@ def _remerge_bucket(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             "data": batch["data"],
             "impact_freqs": batch["impact_freqs"],
             "impact_norms": batch["impact_norms"],
+            "term_bucket": pdf["term_bucket"].to_numpy()[tchange][tidx],
         }
     )
-    return out
-
-
-def read_postings(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(index_dir, "postings"))
 
 
 def read_term_dict(spark: SparkSession, index_dir: str) -> DataFrame:

@@ -8,9 +8,11 @@ from lucene_spark.functions.codec import (
     BLOCK_SIZE,
     competitive_impacts,
     decode_block,
+    decode_blocks,
     decode_postings,
     encode_block,
     encode_postings,
+    encode_postings_batch,
     for_pack,
     for_unpack,
     vint_decode,
@@ -193,3 +195,92 @@ def test_bitset_dense_block_roundtrip_and_size():
             np.testing.assert_array_equal(f, freqs_all[lo:hi])
             np.testing.assert_array_equal(nb, norms_all[lo:hi])
             j += 1
+
+
+def _random_blocks(rng) -> list[tuple[bytes, int, int]]:
+    """(data, num_docs, first_doc) blocks of every layout, shuffled: batch
+    VInt tails (all freqs folded, and with freq > 1), scalar VInt tails
+    with packed norms (width < 8), FOR and bitset full blocks (plain and
+    PFOR-patched freqs), FOR deltas 62 bits wide and 1-doc blocks."""
+    def docs_of(n, span):
+        return np.sort(rng.choice(span, size=n, replace=False)) + rng.integers(0, 10**6)
+
+    def batch(docs, freqs, norms):
+        out = encode_postings_batch(docs, freqs, norms, [0], [docs.size])
+        return list(zip(out["data"], out["num_docs"], out["first_doc"]))
+
+    def scalar(docs, freqs, norms):
+        return [(b["data"], b["num_docs"], b["first_doc"])
+                for b in encode_postings(docs, freqs, norms)]
+
+    def tail_folded():
+        n = int(rng.integers(1, BLOCK_SIZE))
+        return batch(docs_of(n, 10**5), np.ones(n, np.int64), rng.integers(0, 256, n))
+
+    def tail_freqs():
+        n = int(rng.integers(1, BLOCK_SIZE))
+        return batch(docs_of(n, 10**5), rng.integers(1, 300, n), rng.integers(0, 256, n))
+
+    def tail_packed_norms():
+        n = int(rng.integers(1, BLOCK_SIZE))
+        return scalar(docs_of(n, 10**5), rng.integers(1, 4, n),
+                      rng.integers(0, 2 ** int(rng.integers(0, 8)), n))
+
+    def full(dense):
+        n = BLOCK_SIZE * int(rng.integers(1, 3))
+        span = n + 60 if dense else 10**7
+        freqs = rng.integers(1, 4, n)
+        if rng.random() < 0.5:  # a few outliers -> patched PFOR freqs
+            freqs[rng.integers(0, n, 5)] = rng.integers(1000, 10**6, 5)
+        enc = batch if rng.random() < 0.5 else scalar
+        return enc(docs_of(n, span), freqs, rng.integers(0, 256, n))
+
+    def wide_gaps():
+        # three consecutive near-2^61 gaps: 61-bit FOR deltas, at least
+        # one of which straddles a 64-bit read window
+        gaps = np.ones(BLOCK_SIZE, dtype=np.int64)
+        at = int(rng.integers(1, BLOCK_SIZE - 2))
+        gaps[at:at + 3] = 2 ** 61 - rng.integers(1, 1000, 3)
+        docs = np.cumsum(gaps)
+        return scalar(docs, rng.integers(1, 4, BLOCK_SIZE),
+                      rng.integers(0, 256, BLOCK_SIZE))
+
+    def one_doc():
+        d = docs_of(1, 10**9)
+        return (batch if rng.random() < 0.5 else scalar)(
+            d, rng.integers(1, 5, 1), rng.integers(0, 256, 1))
+
+    makers = [tail_folded, tail_freqs, tail_packed_norms,
+              lambda: full(False), lambda: full(True), wide_gaps, one_doc]
+    blocks = []
+    for make in makers:
+        for _ in range(int(rng.integers(1, 6))):
+            blocks += make()
+    return [blocks[i] for i in rng.permutation(len(blocks))]
+
+
+@pytest.mark.parametrize("seed", range(10))
+def test_decode_blocks_matches_decode_block(seed):
+    """The batch decoder equals concatenated decode_block results on a
+    random mix of every block layout."""
+    blocks = _random_blocks(np.random.default_rng(seed))
+    kinds = set()
+    for data, nd, _ in blocks:
+        if data[0] == 0xFF:
+            # batch tails end in [8][nd raw norm bytes]; scalar ones pack
+            kinds.add("tail/raw-norms" if data[-nd - 1] == 8 else "tail/packed")
+        else:
+            kinds.add("bitset" if data[0] == 0xFE else "for")
+        kinds.add("1-doc" if nd == 1 else "multi")
+    assert kinds >= {"tail/raw-norms", "tail/packed", "bitset", "for", "1-doc"}
+    got = decode_blocks(*zip(*blocks))
+    want = [decode_block(*b) for b in blocks]
+    for i in range(3):
+        exp = np.concatenate([w[i] for w in want])
+        assert got[i].dtype == exp.dtype == np.int64
+        np.testing.assert_array_equal(got[i], exp)
+
+
+def test_decode_blocks_empty():
+    for arr in decode_blocks([], [], []):
+        assert arr.dtype == np.int64 and arr.size == 0

@@ -250,3 +250,117 @@ def test_flush_policy_granularity_and_rank_identity(spark, small_corpus,
     for q in ('{"term": "ba"}', '{"bool": {"must": [{"term": "ba"}], '
               '"should": [{"term": "ca"}]}}'):
         assert _spark_hits(s, q, 10) == _oracle_hits(oracle_index, q, 10)
+
+
+def _expected_merge(local, hot_term_df):
+    """merge_index's postings rows, rebuilt from postings_local: hot terms
+    (df >= hot_term_df) keep their blocks; every cold term is decoded block
+    by block and re-encoded into dense merged blocks."""
+    from lucene_spark.functions.codec import decode_block, encode_postings_batch
+
+    rows = []
+    for term, g in local.sort_values(["term", "segment_id", "block_id"]).groupby("term"):
+        if g["num_docs"].sum() >= hot_term_df:
+            rows += [tuple(r) for r in g[list(g.columns)].itertuples(index=False)]
+            continue
+        dec = [decode_block(d, int(n), int(f))
+               for d, n, f in zip(g["data"], g["num_docs"], g["first_doc"])]
+        docs, freqs, norms = (np.concatenate([x[i] for x in dec]) for i in range(3))
+        out = encode_postings_batch(docs, freqs, norms, [0], [docs.size])
+        rows += list(zip([term] * len(out["data"]), [-1] * len(out["data"]),
+                         out["block_id"], out["first_doc"], out["last_doc"],
+                         out["num_docs"], out["ttf"], out["data"],
+                         out["impact_freqs"], out["impact_norms"]))
+    return sorted((r[0], int(r[1]), int(r[2]), int(r[3]), int(r[4]), int(r[5]),
+                   int(r[6]), bytes(r[7]), list(r[8]), list(r[9])) for r in rows)
+
+
+def test_merge_one_shuffle_matches_expectation(spark, tmp_path, monkeypatch):
+    """merge_index streams each term bucket through one task: terms at
+    exactly hot_term_df pass through, terms one below are re-encoded, a hot
+    and a cold term each span Arrow batch boundaries, every bucket is one
+    sorted file, and the merge runs in a pinned number of Spark jobs."""
+    import glob
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from lucene_spark.index import merge as merge_mod
+    from lucene_spark.index.build import IndexConfig, build_index
+    from lucene_spark.index.merge import merge_index, term_bucket_of
+
+    hot = 10
+    rows = []
+    for d in range(100):  # 50 conversations x 2 turns, doc id d
+        words = ["common", f"u{d}"]
+        if d % 10 == 0:
+            words.append("hotexact")  # df == hot
+        if d % 11 == 0 and d < 99:
+            words.append("coldjust")  # df == hot - 1
+        rows.append((f"c{d // 2:03d}", d % 2, "user", None, " ".join(words),
+                     pd.Timestamp("2026-01-01")))
+    corpus = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "tool",
+                                         "text", "ts"])
+    idx = str(tmp_path / "merge_idx")
+    cfg = IndexConfig(num_segments=5, term_buckets=4, hot_term_df=hot,
+                      positions=False)
+    build_index(spark, spark.createDataFrame(corpus), idx, cfg)
+
+    local = pq.read_table(os.path.join(idx, "postings_local")).to_pandas()
+    local = local.drop(columns="segment")
+    df = local.groupby("term")["num_docs"].sum()
+    blocks = local.groupby("term").size()
+    assert (df["hotexact"], df["coldjust"], df["common"]) == (hot, hot - 1, 100)
+    # >= 4 rows each: with 3-row batches every one spans a batch boundary
+    assert min(blocks["hotexact"], blocks["coldjust"], blocks["common"]) >= 4
+    want = _expected_merge(local, hot)
+
+    sc = spark.sparkContext
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
+    sc.setJobGroup("test-merge-jobs", "merge_index job count")
+    try:
+        merge_index(spark, idx)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    # term_dict: range-partition sample + write; postings: one shuffle + write
+    assert len(sc.statusTracker().getJobIdsForGroup("test-merge-jobs")) == 5
+
+    got = []
+    for bdir in sorted(glob.glob(os.path.join(idx, "postings", "term_bucket=*"))):
+        files = glob.glob(os.path.join(bdir, "*.parquet"))
+        assert len(files) == 1, bdir
+        t = pq.read_table(files[0]).to_pandas()
+        key = list(zip(t["term"], t["segment_id"], t["block_id"]))
+        assert key == sorted(key), bdir
+        bucket = int(bdir.rsplit("=", 1)[1])
+        assert all(term_bucket_of(x, cfg.term_buckets) == bucket for x in t["term"])
+        got += [(r[0], int(r[1]), int(r[2]), int(r[3]), int(r[4]), int(r[5]),
+                 int(r[6]), bytes(r[7]), list(r[8]), list(r[9]))
+                for r in t.itertuples(index=False)]
+    assert sorted(got) == want
+    merged = {r[0]: r[1] for r in want}
+    assert merged["hotexact"] >= 0 and merged["coldjust"] == -1
+
+    # the streaming pass alone, at every batch size: same rows, and no
+    # re-encode ever sees a term with hot_term_df or more postings
+    seen = []
+
+    def spy(pdf):
+        seen.append(int(pdf.groupby("term")["num_docs"].sum().max()))
+        return real(pdf)
+
+    real = merge_mod._reencode
+    monkeypatch.setattr(merge_mod, "_reencode", spy)
+    ordered = local.sort_values(["term", "segment_id", "block_id"], ignore_index=True)
+    ordered["term_bucket"] = 0
+    for size in (1, 2, 3, 7, len(ordered)):
+        batches = (ordered.iloc[i:i + size] for i in range(0, len(ordered), size))
+        out = pd.concat(list(merge_mod._remerge_stream(batches, hot_term_df=hot)))
+        assert sorted(
+            (r[0], int(r[1]), int(r[2]), int(r[3]), int(r[4]), int(r[5]),
+             int(r[6]), bytes(r[7]), list(r[8]), list(r[9]))
+            for r in out.drop(columns="term_bucket").itertuples(index=False)
+        ) == want, size
+    assert seen and max(seen) < hot
